@@ -96,4 +96,12 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+
+  /** Cache and materialize every table of `d`: the resident-engine
+    * condition (Bench, tools.QueryProfile) in which Catalyst substitutes
+    * the cached InMemoryRelation into every matching subplan. */
+  def cacheAll(s: SparkSession, d: String): Unit = names.foreach { t =>
+    val df = if (t == "events") events(s, d) else load(s, d, t)
+    df.cache().count()
+  }
 }

@@ -1,32 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same plan-shaping knobs (and defaults) as graft.Bench: the scan
-    // repartition perturbs row order, which can change order-sensitive
-    // results (collect_list/first, float-sum association) — so the plans the
-    // bench TIMES must be the plans this harness VERIFIES. Keep these in
-    // sync with Bench.main.
-    def env(n: String, d: String) =
-      sys.env.get(n).map(_.trim).filter(_.nonEmpty).getOrElse(d)
-    // SPARK_GRAFT_MASTER (never set by the driver; default = the driver's
-    // local[$cpus] contract) lets the multi-JVM deploy audit run this same
-    // 222-query gate on local-cluster[n,c,mem] — executors in separate
-    // JVMs, real serialization/broadcast paths (round-14 ask #3).
-    val spark = SparkSession.builder()
-      .master(env("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", env("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.adaptive.enabled", env("SPARK_GRAFT_AQE", "false"))
-      .config("graft.scan.repartition", env("SPARK_GRAFT_REPART", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The catalog regime, shared with graft.Bench (see Regime): the plans
+    // the bench TIMES are the plans this harness VERIFIES.
+    // SPARK_GRAFT_MASTER (unset by default) lets the multi-JVM
+    // deploy audit run this same 222-query gate on local-cluster[n,c,mem]
+    // — executors in separate JVMs, real serialization/broadcast paths.
+    val spark = sys.env.get("SPARK_GRAFT_MASTER").map(_.trim).filter(_.nonEmpty)
+      .fold(Regime.catalog())(Regime.catalog(_))
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (driver never sets it): comma-separated query
     // names; when present, only those queries are dumped — the oracle json
@@ -50,20 +35,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -7,7 +7,8 @@
 #
 # Usage:  tools/scale_gate.sh            # full gate, bar = 2.0x per row
 #   env:  SF=1 SF_DIR=gendata/sf1 BAR=2.0 RUNS=5 DUCK_RUNS=3
-#         QUERIES=q97_pagerank,...      # override the row set
+#         QUERIES=q97_pagerank,...      # override the row set (default:
+#         the 17 rows of SCALE.md's round-16 end-of-round table)
 #
 # The q125/q129 DuckDB twins are EXCLUDED by default at sf1: q125's twin
 # exhausts spill disk and is OOM-killed on a 128 GB host (dmesg-verified,
@@ -32,7 +33,7 @@ SF_DIR="${SF_DIR:-gendata/sf$SF}"
 BAR="${BAR:-2.0}"
 RUNS="${RUNS:-5}"
 DUCK_RUNS="${DUCK_RUNS:-3}"
-QUERIES="${QUERIES:-q97_pagerank,q102_ppr,q146_weighted_pagerank,q80_naive_bayes,q190_textrank,q128_kcore,q116_basket_lift,q61_dedup_clusters,q72_dedup_keep_best}"
+QUERIES="${QUERIES:-q61_dedup_clusters,q72_dedup_keep_best,q80_naive_bayes,q85_perplexity_gate,q96_trigram_backoff,q97_pagerank,q102_ppr,q116_basket_lift,q126_link_predict,q128_kcore,q146_weighted_pagerank,q162_hll_set_algebra,q167_acf,q168_weighted_quantiles,q169_max_concurrent,q188_assortativity,q190_textrank}"
 OUT="gendata/scale_gate"
 mkdir -p "$OUT"
 
@@ -64,22 +65,10 @@ done
 LOAD1_START="$(load1)"
 echo "[scale_gate] quiet-window check passed: load1=$LOAD1_START (ceiling $QUIET_LOAD1)" >&2
 
-# JDK 17 module opens Spark needs outside spark-submit (same list as
-# build.sbt); running the compiled classes directly avoids fighting a
-# resident sbt server for the project lock.
-JOPTS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JOPTS="$JOPTS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-run_main() {
-  # shellcheck disable=SC2086
-  java $JOPTS -Xmx"${SPARK_DRIVER_MEM:-12g}" \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" "$@"
-}
+# Compiled classes run directly through tools/jrun.sh (no fight with a
+# resident sbt server for the project lock); 12g heap unless
+# SPARK_DRIVER_MEM says otherwise.
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-12g}"
 
 if [ ! -d target/scala-2.13/classes/graft ]; then
   echo "[scale_gate] compiling..." >&2
@@ -88,13 +77,13 @@ fi
 
 if [ ! -e "$SF_DIR/lineitem.parquet" ]; then
   echo "[scale_gate] generating $SF_DIR (sf=$SF)..." >&2
-  run_main graft.tools.GenData "$SF_DIR" "$SF" >&2
+  tools/jrun.sh graft.tools.GenData "$SF_DIR" "$SF" >&2
 fi
 
 if [ ! -s "$OUT/oracle_sql.json" ]; then
   echo "[scale_gate] dumping oracle SQL (cheap single-query verify)..." >&2
   GRAFT_VERIFY_ONLY=q01_pricing_summary \
-    run_main graft.Verify /root/testdata/sf0.001 "$OUT/oracle_dump" >&2
+    tools/jrun.sh graft.Verify /root/testdata/sf0.001 "$OUT/oracle_dump" >&2
   cp "$OUT/oracle_dump/oracle_sql.json" "$OUT/oracle_sql.json"
 fi
 
@@ -102,7 +91,7 @@ echo "[scale_gate] Spark side ($RUNS runs/query, SHUFFLE=32 REPART=32)..." >&2
 SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_SHUFFLE=32 SPARK_GRAFT_REPART=32 \
 SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_RUNS="$RUNS" \
 SPARK_GRAFT_BENCH_OUT="$OUT/bench_sf$SF.json" \
-  run_main graft.Bench >&2
+  tools/jrun.sh graft.Bench >&2
 
 echo "[scale_gate] DuckDB side ($DUCK_RUNS runs/query)..." >&2
 python3 - "$OUT/oracle_sql.json" "$QUERIES" "$OUT/oracle_gate.json" <<'PY'

@@ -24,21 +24,11 @@ TIER="${1:-quick}"
 WORK="${WORK:-/tmp/verify_all}"
 mkdir -p "$WORK"
 
-# Same direct-java runner as scale_gate.sh: avoids fighting a resident sbt
-# server for the project lock, and cold-starts in ~8 s instead of ~40.
-JOPTS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JOPTS="$JOPTS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-run_main() {
-  # shellcheck disable=SC2086
-  java $JOPTS -Xmx"${SPARK_DRIVER_MEM:-12g}" \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" "$@"
-}
+# Compiled classes run directly through tools/jrun.sh, as in scale_gate.sh:
+# no fight with a resident sbt server for the project lock, and a cold
+# start in ~8 s instead of ~40. 12g heap unless SPARK_DRIVER_MEM says
+# otherwise.
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-12g}"
 
 step() { echo; echo "=== [verify_all/$TIER] $* ==="; }
 
@@ -50,7 +40,7 @@ echo "compile OK"
 gate() { # gate <sf_dir> <out_dir> — Verify dump + DuckDB compare
   local sf="$1" out="$2"
   rm -rf "$out"
-  run_main graft.Verify "$sf" "$out" > "$out.verify.log" 2>&1 || {
+  tools/jrun.sh graft.Verify "$sf" "$out" > "$out.verify.log" 2>&1 || {
     tail -30 "$out.verify.log"; exit 1; }
   python3 tools/check.py "$sf" "$out"
 }
@@ -74,7 +64,7 @@ full)
   step "bench ratio guard @ sf0.1 (Spark vs DuckDB, bar 2.0x total)"
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     SPARK_GRAFT_BENCH_OUT="$WORK/bench_sf0.1.json" \
-    run_main graft.Bench > "$WORK/bench.log" 2>&1 || { tail -20 "$WORK/bench.log"; exit 1; }
+    tools/jrun.sh graft.Bench > "$WORK/bench.log" 2>&1 || { tail -20 "$WORK/bench.log"; exit 1; }
   python3 tools/duck_bench.py /root/testdata/sf0.1 \
     "$WORK/out_sf0.1/oracle_sql.json" 3 > "$WORK/duck_sf0.1.json"
   python3 tools/ratio_guard.py "$WORK/bench_sf0.1.json" "$WORK/duck_sf0.1.json" 2.0 | tail -5
@@ -82,7 +72,7 @@ full)
 scale)
   step "generated-data oracle gate @ gendata/sf0.1"
   if [ ! -e gendata/sf0.1/lineitem.parquet ]; then
-    run_main graft.tools.GenData gendata/sf0.1 0.1
+    tools/jrun.sh graft.tools.GenData gendata/sf0.1 0.1
   fi
   gate gendata/sf0.1 "$WORK/out_gen_sf0.1"
   step "sf1 scale gate (quiet-window disciplined; see tools/scale_gate.sh)"
