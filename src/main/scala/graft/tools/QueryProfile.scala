@@ -35,22 +35,28 @@ import graft.queries.Catalog
   *    or `exec-error` (execution threw; also any failure of the measured
   *    run), with `error` and the `causes` chain on failure;
   *  - `build_ms`, `exec_ms`: the measured run's build and execution;
-  *  - `stages`: wall time, executor run time, tasks, input bytes, shuffle
-  *    read and write bytes of each completed stage;
-  *  - `wall_sum_ms`, `run_sum_ms`: their sums; `gap_ms`: the part of the
-  *    measured run (build + exec) during which none of its stages ran;
+  *  - `stages`: wall time, executor run time, executor CPU time, tasks,
+  *    input bytes, shuffle read and write bytes of each completed stage;
+  *  - `wall_sum_ms`, `run_sum_ms`, `cpu_sum_ms`: their sums; `gap_ms`: the
+  *    part of the measured run (build + exec) during which none of its
+  *    stages ran;
   *  - `plan`: executed-plan operator counts; with `--plan`, also
   *    `formatted_plan`.
+  *
+  * Run time is task wall time, so when `SPARK_GRAFT_CPUS` exceeds the host's
+  * cores it also counts the time a task waits for a core; CPU time does not.
+  * Profile with `SPARK_GRAFT_CPUS=$(nproc)` when `run_sum_ms` is to be read
+  * as compute.
   */
 object QueryProfile {
 
   private case class Stage(id: Int, attempt: Int, name: String, startMs: Long,
-      endMs: Long, runMs: Long, tasks: Int, inputBytes: Long,
+      endMs: Long, runMs: Long, cpuMs: Long, tasks: Int, inputBytes: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long) {
     def wallMs: Long = endMs - startMs
     def json: String =
       s"""{"id":$id,"attempt":$attempt,"name":${Json.str(name)},"wall_ms":$wallMs,""" +
-        s""""run_ms":$runMs,"tasks":$tasks,"input_bytes":$inputBytes,""" +
+        s""""run_ms":$runMs,"cpu_ms":$cpuMs,"tasks":$tasks,"input_bytes":$inputBytes,""" +
         s""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes}"""
   }
 
@@ -77,7 +83,8 @@ object QueryProfile {
         val m = i.taskMetrics
         val start = i.submissionTime.getOrElse(0L)
         done.add(Stage(i.stageId, i.attemptNumber(), i.name.takeWhile(_ != '\n'),
-          start, i.completionTime.getOrElse(start), m.executorRunTime, i.numTasks,
+          start, i.completionTime.getOrElse(start), m.executorRunTime,
+          m.executorCpuTime / 1000000L, i.numTasks,
           m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
           m.shuffleWriteMetrics.bytesWritten))
       }
@@ -158,6 +165,7 @@ object QueryProfile {
         "exec_ms" -> f"${(t2 - t1) / 1e6}%.1f",
         "wall_sum_ms" -> ss.map(_.wallMs).sum.toString,
         "run_sum_ms" -> ss.map(_.runMs).sum.toString,
+        "cpu_sum_ms" -> ss.map(_.cpuMs).sum.toString,
         "gap_ms" -> ((w1 - w0 - covered) max 0L).toString,
         "stages" -> ss.map(_.json).mkString("[", ",", "]"),
         "plan" -> planKeys.map(k => s""""$k":${counts(k)}""").mkString("{", ",", "}")) ++
@@ -178,7 +186,7 @@ object QueryProfile {
 
   def main(args: Array[String]): Unit = {
     val (flags, names) = args.toSeq.partition(_ == "--plan")
-    require(names.nonEmpty, "usage: QueryProfile <query…> [--plan]")
+    require(names.nonEmpty, "usage: [SPARK_GRAFT_CPUS=$(nproc)] QueryProfile <query…> [--plan]")
     val qs = names.map(n => Catalog.all.find(_.name == n).getOrElse(sys.error(s"no query $n")))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("set SPARK_GRAFT_SF_DIR to a catalog table directory"))

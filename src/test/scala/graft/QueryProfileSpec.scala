@@ -21,6 +21,8 @@ class QueryProfileSpec extends SparkSpec {
     assert(r.get("plan").get("smj").asInt == 0)
     assert(r.get("wall_sum_ms").asLong > 0)
     assert(r.get("run_sum_ms").asLong > 0)
+    assert(r.get("cpu_sum_ms").asLong > 0)
+    assert(r.get("stages").get(0).has("cpu_ms"))
     assert(r.get("gap_ms").asLong >= 0)
     assert(r.get("stages").size > 0)
     assert(r.get("exec_ms").asDouble > 0)
